@@ -560,6 +560,7 @@ object Bench {
           graft.ops.Delete.delete(spark, diDir, col("id") >= q)
         }
         assert(r3i.rowsDeleted == q, s"indexed delete r3 drifted: $r3i")
+        assert(r3i.filesRewritten <= 1, s"indexed retention delete r3 must be ~metadata-only: $r3i")
         s3
       }
       // the surviving files still carry their index streams (remapped, not

@@ -460,6 +460,19 @@ object Dedup {
     val ov = scala.collection.mutable.LinkedHashMap.empty[Any, (Any, Long)]
     var ovFrontier = scala.collection.mutable.LinkedHashMap.empty[Any, Any]
     var ovMode = false
+    // the overlay compares labels driver-side (ltAny), so it runs only for id
+    // types whose JVM ordering is exactly Spark's. Binary ids (no JVM order),
+    // float/double (Java orders -0.0 below 0.0, Spark equates them) and
+    // collated strings stay on the dense rounds, which compare inside Spark.
+    val overlayOrderable = {
+      import org.apache.spark.sql.types._
+      labels.schema("u").dataType match {
+        case StringType => true // the default (binary) collation only
+        case ByteType | ShortType | IntegerType | LongType | DateType | TimestampType |
+            TimestampNTZType | _: DecimalType => true
+        case _ => false
+      }
+    }
     // Spark's binary string ordering (UTF8String), not Java's UTF-16 order
     def ltAny(a: Any, b: Any): Boolean = (a, b) match {
       case (x: String, y: String) =>
@@ -468,8 +481,8 @@ object Dedup {
       case (x: java.lang.Long, y: java.lang.Long) => x.longValue() < y.longValue()
       case (x: java.lang.Integer, y: java.lang.Integer) => x.intValue() < y.intValue()
       case (x: Comparable[Any] @unchecked, _) => x.compareTo(b) < 0
-      case _ => throw new IllegalArgumentException(
-        s"dedupClusters: unorderable id type ${a.getClass}")
+      case _ => throw new IllegalStateException( // overlayOrderable admits no other type
+        s"dedupClusters: overlay compare on id type ${a.getClass}")
     }
     def mkDF(rows: Seq[org.apache.spark.sql.Row],
         schema: org.apache.spark.sql.types.StructType): DataFrame = {
@@ -569,7 +582,7 @@ object Dedup {
     while (changed > 0 && iter < maxIters) {
       val roundT0 = System.nanoTime()
       // overlay eligibility: every driver structure bounded up front
-      val overlayEligible = delta != null && changed <= ovGate &&
+      val overlayEligible = overlayOrderable && delta != null && changed <= ovGate &&
         frontierDegSum + changed <= ovGate && ov.size + changed <= 4 * ovGate
       if (overlayEligible) {
         if (!ovMode) {

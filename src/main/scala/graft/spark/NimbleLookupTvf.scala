@@ -32,10 +32,14 @@ import graft.format.{GraftIO, Lookup}
   * [[graft.format.Lookup]] (footer-cached stripe pruning + `#cidx`/`#idx`
   * probes — milliseconds per request, no Spark job), materialized as a
   * [[LocalRelation]]. That is the right shape for what this API is — a
-  * low-latency point-probe surface; a LARGE probe set (thousands of keys+)
-  * belongs to the distributed scan path instead: `probe JOIN nimble_table`
-  * pushes an IN-filter into the scan, which the index-assisted candidate
-  * chunk selection serves (q25 / E2EFilterSpec) with full parallelism.
+  * low-latency point-probe surface with request-ordered results. The DSv2
+  * scan serves the other probe shapes: `WHERE k = ?` or a small `IN` on a
+  * hash-indexed column whose scan plans one partition also runs on the
+  * driver (a LocalScan, see [[NimbleScanBuilder]]), in scan order; a LARGE
+  * probe set (thousands of keys+) belongs to the distributed scan path:
+  * `probe JOIN nimble_table` pushes an IN-filter into the scan, which the
+  * index-assisted candidate chunk selection serves (q25 / E2EFilterSpec)
+  * with full parallelism.
   */
 object NimbleLookupTvf {
   val name = "nimble_lookup"

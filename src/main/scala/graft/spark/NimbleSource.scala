@@ -187,6 +187,13 @@ object NimbleSource {
   /** Per-JVM count of in-scan hash-index probes (index-assisted chunk
     * selection — SelectiveNimbleIndexReader in the DSv2 path). */
   val indexScanProbes = new java.util.concurrent.atomic.AtomicLong()
+
+  /** Largest `In` list the hash index probes; longer lists scan unassisted. */
+  private[spark] final val IndexProbeMaxValues = 64
+
+  /** Most rows a driver-local index probe may return (see
+    * [[NimbleScanBuilder]]): past it the probe runs as a Spark job. */
+  private[spark] final val DriverProbeMaxRows = 4096
   /** Candidate chunk set for this stripe from the per-stripe indexes, or
     * null when no pushed filter can use one (reference:
     * velox/selective/SelectiveNimbleIndexReader.h:45-70 — here wired into
@@ -214,7 +221,7 @@ object NimbleSource {
       val probe: Option[(String, Seq[Any])] = filters(fi) match {
         case org.apache.spark.sql.sources.EqualTo(c, v) => Some((c, Seq(v)))
         case org.apache.spark.sql.sources.EqualNullSafe(c, v) if v != null => Some((c, Seq(v)))
-        case org.apache.spark.sql.sources.In(c, vs) if vs.length <= 64 => Some((c, vs.toSeq))
+        case org.apache.spark.sql.sources.In(c, vs) if vs.length <= IndexProbeMaxValues => Some((c, vs.toSeq))
         case _ => None
       }
       probe match {
@@ -1674,8 +1681,88 @@ class NimbleScanBuilder(path: String, dataSchema: StructType, maxFilesPerTrigger
     else if (aggMixed != null || aggGroups.nonEmpty)
       new NimbleAggBatchScan(path, dataSchema, aggOut, aggOps, pushed, aggPartials,
         Option(aggMixed).getOrElse(Seq.empty), aggGroups)
-    else new NimbleScan(path, dataSchema, required, pushed, limit, maxFilesPerTrigger, unsignedCols,
-      topN, rowLevel, maxBytesPerTrigger = maxBytesPerTrigger, statsOnly = statsOnly)
+    else {
+      val scan = new NimbleScan(path, dataSchema, required, pushed, limit, maxFilesPerTrigger,
+        unsignedCols, topN, rowLevel, maxBytesPerTrigger = maxBytesPerTrigger, statsOnly = statsOnly)
+      indexedProbeKey(scan).flatMap(driverLocalProbe(scan, _)).getOrElse(scan)
+    }
+
+  /** The column of a pushed `EqualTo`/`In` whose `#idx:` hash index every
+    * pinned file carries — the point-probe shape [[driverLocalProbe]] may
+    * answer. None for row-level, streaming-capped and TopN scans. */
+  private def indexedProbeKey(scan: NimbleScan): Option[String] = {
+    if (rowLevel != null || topN.isDefined || maxFilesPerTrigger >= 0 || maxBytesPerTrigger >= 0)
+      return None
+    val keys = pushed.collect {
+      case org.apache.spark.sql.sources.EqualTo(c, v) if v != null => c
+      case org.apache.spark.sql.sources.In(c, vs) if vs.length <= NimbleSource.IndexProbeMaxValues => c
+    }.distinct
+    val files = scan.pinnedFiles
+    if (keys.isEmpty || files.isEmpty) return None
+    NimbleSource.prefetchFooters(files)
+    keys.find(c => files.forall { f =>
+      val r = new Tablet.Reader(f, NimbleSource.footerOf(f))
+      try r.keyId(Tablet.indexStreamKey(c)) >= 0 && !r.nanosSplit(c) finally r.close()
+    })
+  }
+
+  /** Driver-local index probe: when the scan plans at most one input
+    * partition, that partition would run as a single task anyway, so read it
+    * here through the same reader factory and chain reader a task would use
+    * (index-assisted chunk selection, block cache, global counters) and hand
+    * Spark the copied rows as a LocalScan — no job, no task. None (the caller
+    * keeps `scan`, whose memoized partitions are not planned again) when the
+    * plan has several partitions or the output passes
+    * [[NimbleSource.DriverProbeMaxRows]]; rows read so far are dropped. */
+  private def driverLocalProbe(scan: NimbleScan, key: String): Option[Scan] = {
+    val parts = scan.planInputPartitions()
+    if (parts.length > 1) return None
+    val rows = mutable.ArrayBuffer[InternalRow]()
+    var bytes = 0L
+    var metrics = Map.empty[String, Long]
+    var fits = true
+    parts.headOption.foreach { part =>
+      val reader = scan.createReaderFactory().createReader(part)
+      try {
+        val copy = org.apache.spark.sql.catalyst.expressions.UnsafeProjection.create(required)
+        while (fits && reader.next()) {
+          if (rows.length >= NimbleSource.DriverProbeMaxRows) fits = false
+          else {
+            val row = copy(reader.get()).copy()
+            rows += row
+            bytes += row.getSizeInBytes
+          }
+        }
+        metrics = reader.currentMetricsValues().map(m => m.name() -> m.value()).toMap
+      } finally reader.close()
+    }
+    if (!fits) None
+    else Some(new NimbleProbeScan(path, key, pushed, required, rows.toArray, bytes, metrics))
+  }
+}
+
+/** A one-partition index probe answered on the driver (see
+  * [[NimbleScanBuilder]]): Spark plans a LocalTableScanExec over the rows.
+  * That node carries no DSv2 custom metrics, so the description reports
+  * what the probe's reader did. */
+class NimbleProbeScan(path: String, key: String, filters: Array[Filter], out: StructType,
+    resultRows: Array[InternalRow], resultBytes: Long, readerMetrics: Map[String, Long])
+    extends LocalScan with SupportsReportStatistics {
+  override def readSchema(): StructType = out
+  override def rows(): Array[InternalRow] = resultRows
+  override def description(): String = {
+    def m(n: String): Long = readerMetrics.getOrElse(n, 0L)
+    s"nimble driver-local probe path=${NimbleSource.displayPath(path)}, key=$key, " +
+      s"pushed=[${filters.mkString(", ")}], read=${out.catalogString}, " +
+      s"stripesRead=${m("stripesRead")}, chunksSkipped=${m("chunksSkipped")}, " +
+      s"streamBytesRead=${m("streamBytesRead")}, rowsOut=${resultRows.length}"
+  }
+  // exact, so a join can broadcast the probe's output; without it Spark
+  // sizes a LocalScan at spark.sql.defaultSizeInBytes
+  override def estimateStatistics(): Statistics = new Statistics {
+    override def sizeInBytes(): util.OptionalLong = util.OptionalLong.of(math.max(1L, resultBytes))
+    override def numRows(): util.OptionalLong = util.OptionalLong.of(resultRows.length.toLong)
+  }
 }
 
 case class NimbleStripePartition(file: String, stripe: Int) extends InputPartition
@@ -1720,7 +1807,7 @@ class NimbleScan(path: String, dataSchema: StructType, required: StructType, fil
     * stats-derived rewrite and execution would be scanned but not covered by
     // the proof (the r12-advice TOCTOU). */
   private[spark] lazy val pinnedMetas: Seq[GraftIO.FileMeta] = NimbleSource.listMeta(path)
-  private def pinnedFiles: Seq[String] = pinnedMetas.map(_.path)
+  private[spark] def pinnedFiles: Seq[String] = pinnedMetas.map(_.path)
 
   /** Spark-UI scan counters (summed over tasks): the skipped-work numbers
     * an operator tuning a 100 TB scan needs without debug logging. */
@@ -1804,7 +1891,10 @@ class NimbleScan(path: String, dataSchema: StructType, required: StructType, fil
         !f.dataType.isInstanceOf[MapType] && !unsignedCols.contains(f.name) =>
         org.apache.spark.sql.connector.expressions.Expressions.column(f.name)
     }
-  override def filter(newFilters: Array[Filter]): Unit = runtimeFilters = newFilters
+  override def filter(newFilters: Array[Filter]): Unit = {
+    runtimeFilters = newFilters
+    planned = null
+  }
 
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
@@ -1897,11 +1987,19 @@ class NimbleScan(path: String, dataSchema: StructType, required: StructType, fil
     parts.toArray
   }
 
+  /** Partitions of the current filter set, planned once: the builder's
+    * driver-local probe check plans them before Spark does. */
+  private var planned: Array[InputPartition] = null
+
   override def planInputPartitions(): Array[InputPartition] = {
-    topN match {
-      case Some(t) => return planTopNPartitions(t)
-      case None => ()
+    if (planned == null) planned = topN match {
+      case Some(t) => planTopNPartitions(t)
+      case None => planStripePartitions()
     }
+    planned
+  }
+
+  private def planStripePartitions(): Array[InputPartition] = {
     val survivors = mutable.ArrayBuffer[(NimbleStripePartition, Long)]()
     var pruned = 0L
     // Row-level (ReplaceData) scans must emit EVERY row of every selected

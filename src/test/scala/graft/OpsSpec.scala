@@ -450,6 +450,25 @@ class OpsSpec extends SparkTestBase {
       s"low-degree chain must never bail: ${Dedup.lastOverlayBails.get()}")
   }
 
+  test("dedupClusters: binary ids route to the dense rounds and label by Spark's byte order") {
+    import spark.implicits._
+    // the same 40-hop chain whose tail rounds overlay with long ids: binary
+    // ids have no driver-side ordering, so every round must stay dense
+    def bid(i: Int): Array[Byte] = Array(0x7f.toByte, i.toByte)
+    val ids = (0 to 40).map(i => 200 + i)
+    // a second component {5, 250}: 0xfa is negative as a signed byte, so only
+    // Spark's unsigned byte order makes 5 its minimum
+    val docs = (ids :+ 5 :+ 250).map(bid).toDF("doc_id")
+    val pairs = (ids.sliding(2).map(s => (bid(s(1)), bid(s(0)))).toSeq :+ ((bid(250), bid(5))))
+      .toDF("a", "b")
+    val got = Dedup.dedupClusters(docs, "doc_id", pairs)
+      .collect().map(r => r.getAs[Array[Byte]](0).toSeq -> r.getAs[Array[Byte]](1).toSeq).toMap
+    assert(got.size == 43)
+    for (i <- ids) assert(got(bid(i).toSeq) == bid(200).toSeq, s"id $i -> ${got(bid(i).toSeq)}")
+    assert(got(bid(250).toSeq) == bid(5).toSeq && got(bid(5).toSeq) == bid(5).toSeq)
+    assert(Dedup.lastOverlayRounds.get() == 0, "binary ids must never enter the overlay")
+  }
+
   test("dedupClusters fuzz: random graphs match a driver-side union-find oracle (seeded)") {
     import spark.implicits._
     // property guard over arbitrary topologies (the fixed-shape arms above
