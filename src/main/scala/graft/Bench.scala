@@ -120,6 +120,29 @@ object Bench {
     walk(new java.io.File(path))
   }
 
+  /** The scale_cc block's input, shared with `graft.tools.Probe cc` so the
+    * shape exists once: a 1,000-hop duplicate chain plus ~1M two-node
+    * clusters (x `factor`) that converge in one round, so the chain alone
+    * drives the round count while the data volume stays bench-shaped (at
+    * factor 10, the ~10M-pair sub-linear wall evidence the 100 TB
+    * extrapolation rests on). Runs a 1/100-scale dedupClusters JIT warm-up
+    * first: the timed runs are few-shot, and a cold pass measured ~1.7x its
+    * warm wall (PROBES.md r18 CcProbe row: iter0 22.6 s vs 13.5 s).
+    * Returns (docs, pairs). */
+  def ccShape(spark: SparkSession, factor: Long = 1L): (DataFrame, DataFrame) = {
+    graft.ops.Dedup.dedupClusters(
+      spark.range(20000L).toDF("doc_id"),
+      "doc_id",
+      spark.range(100).selectExpr("id AS a", "id + 1 AS b").union(
+        spark.range(9900L).selectExpr("200 + id * 2 AS a", "201 + id * 2 AS b")))
+      .unpersist()
+    val restN = 999000L * factor
+    val chain = spark.range(1000).selectExpr("id AS a", "id + 1 AS b")
+    val rest = spark.range(restN).selectExpr(
+      "2000 + id * 2 AS a", "2001 + id * 2 AS b")
+    (spark.range(2000L + 2L * restN).toDF("doc_id"), chain.union(rest))
+  }
+
   /** The 8M-row scale blocks (probe/compact/zorder/delete/cc/spj).
     * Runs in a freshly forked JVM in the default bench flow — see main. */
   private def runScaleBlocks(spark: SparkSession,
@@ -406,8 +429,9 @@ object Bench {
         .save(linDir)
       // JIT warmup on a 1/64-size table: the timed run is single-shot, and a
       // cold first pass through the quantile/Morton/write path measured 2.5x
-      // its steady state (ZOrderProbe: 39 s cold vs 16 s warm on an idle
-      // box) — the trend the rounds compare should be the steady state
+      // its steady state (ZOrderProbe, retired in commit c8f0349's
+      // tools/: 39 s cold vs 16 s warm on an idle box) — the trend the
+      // rounds compare should be the steady state
       val zWarmSrc = s"${System.getProperty("java.io.tmpdir")}/graft-bench/scale-zwarm"
       zdf.limit(500000).repartitionByRange(4, col("a")).sortWithinPartitions("a")
         .write.format("nimble").mode("overwrite")
@@ -613,24 +637,7 @@ object Bench {
     // blowup OOM'd exactly this shape); wall clock proves the per-round
     // persist/cut discipline holds at bench scale ----
     {
-      val chain = spark.range(1000).selectExpr("id AS a", "id + 1 AS b")
-      // ~1M two-node clusters (x GRAFT_SCALE_FACTOR): converge in one round,
-      // so the chain alone drives the round count while the data volume
-      // stays bench-shaped — at factor 10 this is the ~10M-pair sub-linear
-      // wall evidence the 100 TB extrapolation rests on
-      val restN = 999000L * scaleFactor
-      val rest = spark.range(restN).selectExpr(
-        "2000 + id * 2 AS a", "2001 + id * 2 AS b")
-      val ccPairs = chain.union(rest)
-      val ccDocs = spark.range(2000L + 2L * restN).toDF("doc_id")
-      // JIT warmup at 1/100 scale (same reasoning as the zorder block: the
-      // timed run is single-shot and CcProbe measured ~2x cold-vs-warm)
-      graft.ops.Dedup.dedupClusters(
-        spark.range(20000L).toDF("doc_id"),
-        "doc_id",
-        spark.range(100).selectExpr("id AS a", "id + 1 AS b").union(
-          spark.range(9900L).selectExpr("200 + id * 2 AS a", "201 + id * 2 AS b")))
-        .unpersist()
+      val (ccDocs, ccPairs) = ccShape(spark, scaleFactor)
       // min-of-2 (same rationale as the zorder block: bursty co-tenant load
       // between the calibration brackets cannot fake a fast sample)
       val (ccSec, _) = cal("scale_cc_sec")(time {

@@ -2277,8 +2277,9 @@ object Tablet {
       * ONLY the selected rows through the stripe alphabet. An indexed
       * lookup materializes its handful of hit rows regardless, so alphabet
       * preservation buys nothing there and the decline forced a whole-chunk
-      * [min,max] window per hit chunk (r17 LookupProbe: 284 rows decoded
-      * per hit at small batches, almost all of it shared-dict windows).
+      * [min,max] window per hit chunk (PROBES.md r17 LookupProbe row: 284
+      * rows decoded per hit at small batches, almost all of it shared-dict
+      * windows).
       * Non-shared chunks keep the exact nextAtOrNull decline semantics, so
       * the cascade's dict-preserving dense path is untouched. */
     def nextAtLookup(positions: Array[Int]): Column = {

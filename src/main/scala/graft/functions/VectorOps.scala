@@ -27,6 +27,10 @@ case class CosineSim(left: Expression, right: Expression)
     extends BinaryExpression {
   override def dataType: DataType = DoubleType
   override def nullIntolerant: Boolean = true
+  // null on a length mismatch or null element even when both inputs are
+  // non-nullable: the inherited `left.nullable || right.nullable` made
+  // codegen assign an undeclared isNull and the interpreted path write 0.0
+  override def nullable: Boolean = true
   override def prettyName: String = "graft_cosine"
 
   override def nullSafeEval(aAny: Any, bAny: Any): Any =

@@ -81,7 +81,8 @@ object Dedup {
     // extra min from the join-back branch, the two aggregate subtrees then
     // canonicalize differently, exchange reuse never fires (runtime AQE plan:
     // Reused=0), and the "shared" pass re-runs the whole explode+shuffle:
-    // warm A/B 1.06 s (this shape) vs 1.16 s (fused). tools/X02MinSzAB.scala.
+    // warm A/B 1.06 s (this shape) vs 1.16 s (fused); the X02MinSzAB probe
+    // that measured it is in commit c8f0349's tools/ (VERDICT.md r22).
     val minSz = docs.agg(min(col("sz")).as("lmin"))
     // rank each doc's shingles by ascending global frequency with a window
     // (one shuffle on doc; no per-doc array materialization — the previous
@@ -204,9 +205,14 @@ object Dedup {
   def minhashPairs(df: DataFrame, idCol: String, textCol: String,
       n: Int = 3, numPerms: Int = 32, bands: Int = 8,
       threshold: Double = 0.5,
-      /** r22 (guide §5): when > 0, (band, sig) buckets larger than this take
-        * a salted two-level pair explosion so no aggregation-buffer row ever
-        * holds more than ~maxBucket ids — a degenerate corpus (mass
+      /** r22 (guide §5): when > 0, a (band, sig) bucket of |B| > maxBucket
+        * ids takes a salted two-level pair explosion over
+        * ns = ceil(2|B| / maxBucket) hash sub-buckets, so an
+        * aggregation-buffer row holds |B| / ns <= maxBucket / 2 ids in
+        * expectation. The salt is a hash, not a hard cap: the largest
+        * sub-bucket stays under 2 x maxBucket except with a Poisson tail
+        * probability (~1e-6 per sub-bucket at maxBucket 8, smaller above;
+        * not guaranteed at maxBucket < 4) — a degenerate corpus (mass
         * near-identical docs) otherwise concentrates the whole corpus's ids
         * into ONE collect_list row. The pair set is EXACT either way (unlike
         * jaccard's recall-trading maxDf). Off (<= 0) by default: the routing
@@ -258,11 +264,12 @@ object Dedup {
     // A map-side-combining COUNT pass finds oversized (band, sig) buckets
     // (empty at any realistic dup rate — the broadcast is a handful of keys
     // at most); ordinary buckets keep the one-aggregate explode, while
-    // oversized ones split into salted sub-buckets (expected |B|/64 ids per
-    // aggregation row) whose within- and cross-group pair explosions emit
-    // exactly the same unordered pair set: sub-groups PARTITION the bucket,
-    // so each {a, b} appears once — in its own group when salts collide, in
-    // the one ordered (ga < gb) group product otherwise.
+    // oversized ones split into ceil(2|B| / maxBucket) salted sub-buckets
+    // (expected <= maxBucket / 2 ids per aggregation row) whose within- and
+    // cross-group pair explosions emit exactly the same unordered pair set:
+    // sub-groups PARTITION the bucket, so each {a, b} appears once — in its
+    // own group when salts collide, in the one ordered (ga < gb) group
+    // product otherwise.
     val candidates = if (maxBucket <= 0) {
       sigs.groupBy("band", "sig")
         .agg(collect_list(col("doc")).as("ds"))
@@ -272,8 +279,7 @@ object Dedup {
         .filter(col("a") < col("b"))
         .select("a", "b").distinct()
     } else {
-      val big = sigs.groupBy("band", "sig").agg(count(lit(1)).as("bn"))
-        .filter(col("bn") > maxBucket).select("band", "sig")
+      val (big, sub) = saltedBuckets(sigs, maxBucket)
       val smallPairs = sigs.join(broadcast(big), Seq("band", "sig"), "left_anti")
         .groupBy("band", "sig")
         .agg(collect_list(col("doc")).as("ds"))
@@ -282,9 +288,6 @@ object Dedup {
         .select(col("a"), explode(col("ds")).as("b"))
         .filter(col("a") < col("b"))
         .select("a", "b")
-      val sub = sigs.join(broadcast(big), Seq("band", "sig"), "left_semi")
-        .withColumn("g", pmod(xxhash64(col("doc")), lit(64)))
-        .groupBy("band", "sig", "g").agg(collect_list(col("doc")).as("ds"))
       val bigPairs = sub.select(col("band"), col("sig"), col("g").as("ga"), col("ds").as("dsa"))
         .join(sub.select(col("band"), col("sig"), col("g").as("gb"), col("ds").as("dsb")),
           Seq("band", "sig"))
@@ -311,16 +314,26 @@ object Dedup {
       .select(col("a"), col("b"), col("jaccard"))
   }
 
+  /** [[minhashPairs]]' oversized-bucket split: `big` holds each (band, sig)
+    * bucket of more than `maxBucket` ids with its sub-bucket count
+    * ns = ceil(2 bn / maxBucket); `sub` groups those buckets' ids into
+    * (band, sig, g = pmod(xxhash64(doc), ns)) sub-buckets, ds = the ids.
+    * Twice the minimum modulus: at ns = ceil(bn / maxBucket) the mean is
+    * maxBucket and hash skew alone passes 2 x maxBucket (1500 ids at
+    * maxBucket 8: largest sub-bucket 19). */
+  private[graft] def saltedBuckets(sigs: DataFrame, maxBucket: Int): (DataFrame, DataFrame) = {
+    val big = sigs.groupBy("band", "sig").agg(count(lit(1)).as("bn"))
+      .filter(col("bn") > maxBucket)
+      .select(col("band"), col("sig"), ceil(col("bn") * 2 / maxBucket).as("ns"))
+    val sub = sigs.join(broadcast(big), Seq("band", "sig"))
+      .withColumn("g", pmod(xxhash64(col("doc")), col("ns")))
+      .groupBy("band", "sig", "g").agg(collect_list(col("doc")).as("ds"))
+    (big, sub)
+  }
+
   /** Rounds the most recent [[dedupClusters]] call took to converge (bench /
     * diagnostics introspection, same pattern as NimbleSource.chunksSkipped). */
   val lastClusterRounds = new java.util.concurrent.atomic.AtomicInteger()
-
-  /** Candidate-set count JOBS the most recent [[dedupClusters]] call ran.
-    * r18: always 0 — the broadcast gate now runs off a provable per-round
-    * bound (frontier degree-sum + frontier size, folded into the fixpoint
-    * aggregate) instead of measuring the candidate set; the field stays so
-    * CcProbe / OpsSpec pin the no-count-job contract. */
-  val lastCandCountJobs = new java.util.concurrent.atomic.AtomicInteger()
 
   /** Per-round broadcast decisions of the most recent [[dedupClusters]]
     * call (true = the neighbor/self candidate set was broadcast). OpsSpec
@@ -430,7 +443,6 @@ object Dedup {
     // bound below
     var frontierDegSum = 0L
     val bcastLog = scala.collection.mutable.ArrayBuffer[Boolean]()
-    lastCandCountJobs.set(0)
     lastOverlayRounds.set(0)
     lastOverlayBails.set(0)
 
@@ -580,7 +592,6 @@ object Dedup {
     }
 
     while (changed > 0 && iter < maxIters) {
-      val roundT0 = System.nanoTime()
       // overlay eligibility: every driver structure bounded up front
       val overlayEligible = overlayOrderable && delta != null && changed <= ovGate &&
         frontierDegSum + changed <= ovGate && ov.size + changed <= 4 * ovGate
@@ -602,9 +613,6 @@ object Dedup {
             ovFrontier = scala.collection.mutable.LinkedHashMap.empty[Any, Any]
             patch.foreach { case (u, l, _) => ovFrontier.put(u, l) }
             lastOverlayRounds.incrementAndGet()
-            if (sys.env.contains("GRAFT_CC_DEBUG"))
-              println(f"CC round=$iter changed=$changed degSum=$frontierDegSum " +
-                f"wall=${(System.nanoTime() - roundT0) / 1e9}%.3f s overlay")
             iter += 1
           case None =>
             // pointer-in-degree overflow: fold the overlay back into a real
@@ -617,7 +625,7 @@ object Dedup {
               ov.clear()
             }
             ovMode = false
-            denseRound(roundT0)
+            denseRound()
         }
       } else {
         if (ovMode) {
@@ -631,11 +639,11 @@ object Dedup {
           }
           ovMode = false
         }
-        denseRound(roundT0)
+        denseRound()
       }
     }
 
-    def denseRound(roundT0: Long): Unit = {
+    def denseRound(): Unit = {
       val next = if (delta == null) {
         // ---- round 0 fast path (r19): on identity labels every candidate
         // source is degenerate — lbl(v) = v makes the neighbor join the edge
@@ -776,9 +784,6 @@ object Dedup {
         .collect()(0)
       changed = fix.getLong(0)
       frontierDegSum = if (fix.isNullAt(1)) 0L else fix.getLong(1)
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        println(f"CC round=$iter changed=$changed degSum=$frontierDegSum " +
-          f"wall=${(System.nanoTime() - roundT0) / 1e9}%.3f s")
       // safe: cut is materialized, no recompute through it (null on round 0 —
       // the init frame was never cached)
       if (labelsCache != null) labelsCache.unpersist()

@@ -50,8 +50,7 @@ object Delete {
   /** Wall seconds per phase (classify / recoverLayout / rewrite / unlink) of
     * the most recent [[run]] on this JVM. Bench folds these into its dump so
     * a slow scale_delete/scale_sql_update sample adjudicates stall-vs-load
-    * from the committed artifact, without a probe re-run (r17 verdict #5).
-    * Probe-only stderr printing stays behind GRAFT_DML_PHASES. */
+    * from the committed artifact, without a probe re-run (r17 verdict #5). */
   @volatile var lastPhaseSec: Map[String, Double] = Map.empty
 
   // ------------------------------------------------------------ public API
@@ -257,16 +256,13 @@ object Delete {
 
     val schema = org.apache.spark.sql.types.DataType
       .fromJson(NimbleSource.footerOf(files.head).schemaJson).asInstanceOf[StructType]
-    // per-phase walls always record into lastPhaseSec (four nanoTime pairs —
-    // free next to file IO); GRAFT_DML_PHASES=1 additionally prints them
-    val phasePrint = sys.env.contains("GRAFT_DML_PHASES")
+    // per-phase walls record into lastPhaseSec (four nanoTime pairs — free
+    // next to file IO)
     val phaseWalls = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     def phase[A](name: String)(body: => A): A = {
       val t0 = System.nanoTime()
       val r = body
-      val sec = (System.nanoTime() - t0) / 1e9
-      phaseWalls(name) = sec
-      if (phasePrint) System.err.println(f"[dml-phase] $name $sec%.3f s")
+      phaseWalls(name) = (System.nanoTime() - t0) / 1e9
       r
     }
     // r20 (r19 verdict #7 stretch): unsigned-widened predicates translate

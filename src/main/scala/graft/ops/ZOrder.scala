@@ -203,18 +203,7 @@ object ZOrder {
     require(new java.io.File(dir).getCanonicalPath !=
         new java.io.File(outDir).getCanonicalPath,
       s"nimble: zorder: outDir must differ from the input directory ($dir)")
-    // probe-only phase walls, same contract as Delete's GRAFT_DML_PHASES
-    val phasePrint = sys.env.contains("GRAFT_DML_PHASES")
-    def phase[A](name: String)(body: => A): A = {
-      if (!phasePrint) body
-      else {
-        val t0 = System.nanoTime()
-        val r = body
-        System.err.println(f"[zorder-phase] $name ${(System.nanoTime() - t0) / 1e9}%.3f s")
-        r
-      }
-    }
-    val layout = phase("recoverLayout")(Compaction.recoverLayout(dir))
+    val layout = Compaction.recoverLayout(dir)
     require(!layout.contains("numBuckets"),
       s"nimble: zorder: $dir is hash-bucketed — z-ordering would break the " +
         "storage-partitioned-join layout; compact within buckets instead")
@@ -246,8 +235,7 @@ object ZOrder {
     // survive the rewrite untouched, not be overwritten by the curve key
     var zc = "__zkey"
     while (df.schema.fieldNames.contains(zc)) zc += "_"
-    val (keyCol, sampleKeys) =
-      phase("sampleBoundaries")(planKey(df, cols, buckets, totalRows))
+    val (keyCol, sampleKeys) = planKey(df, cols, buckets, totalRows)
     val keyed = df.withColumn(zc, keyCol)
     // r21 OPT (guide §2.4): range-distribute on DRIVER-DERIVED splits
     // instead of repartitionByRange — RangePartitioner's sampling runs a
@@ -300,7 +288,7 @@ object ZOrder {
     if (nPart == nOut) {
       var w = shaped.write.format("nimble").mode("overwrite")
       opts.foreach { case (k, v) => w = w.option(k, v) }
-      phase("shuffleWrite")(w.save(outDir))
+      w.save(outDir)
     } else {
       // two-stage: parallel sorted write into a side dir, then byte-level
       // concat of name-ordered (= curve-ordered) parts into ~targetFileBytes
@@ -310,19 +298,17 @@ object ZOrder {
       try {
         var w = shaped.write.format("nimble").mode("overwrite")
         opts.foreach { case (k, v) => w = w.option(k, v) }
-        phase("shuffleWrite")(w.save(partsDir))
+        w.save(partsDir)
         val parts = GraftIO.listGft(partsDir).map(_.path)
           .sortBy(p => p.substring(p.lastIndexOf('/') + 1))
-        phase("concatParts") {
-          GraftIO.delete(outDir, recursive = true)
-          Compaction.rawConcatOrdered(parts, Nil, outDir, targetFileBytes,
-            overwrite = true) match {
-            case Some(_) => ()
-            case None =>
-              GraftIO.mkdirs(outDir)
-              parts.foreach(p => GraftIO.rename(p,
-                GraftIO.child(outDir, p.substring(p.lastIndexOf('/') + 1))))
-          }
+        GraftIO.delete(outDir, recursive = true)
+        Compaction.rawConcatOrdered(parts, Nil, outDir, targetFileBytes,
+          overwrite = true) match {
+          case Some(_) => ()
+          case None =>
+            GraftIO.mkdirs(outDir)
+            parts.foreach(p => GraftIO.rename(p,
+              GraftIO.child(outDir, p.substring(p.lastIndexOf('/') + 1))))
         }
       } finally GraftIO.delete(partsDir, recursive = true)
     }

@@ -73,15 +73,12 @@ final class FilterCascade(
   /** Columns whose every pushed conjunct (cascade AND tail) is
     * equality-family — safe to keep FSST filter chunks encoded
     * ([[graft.format.LazyFsstBytesCol]]) and compare in the encoded domain.
-    * `graft.fsst.eq.filter=false` (JVM property) disables the path — the
-    * in-JVM A/B switch (tools/ProbeScanAB) and an operational safety valve. */
-  val eqOnlyCols: Set[String] =
-    if (!java.lang.Boolean.parseBoolean(
-        System.getProperty("graft.fsst.eq.filter", "true"))) Set.empty
-    else {
-      val poisoned = filters.filterNot(eqOnlyTree).flatMap(_.references).toSet
-      filters.flatMap(_.references).toSet -- poisoned
-    }
+    * A/B evidence (VERDICT.md r22 item 4, commit `0072b83`): ~1.9x on an
+    * 8M-key probe scan, 0 vs 8M strings decoded. */
+  val eqOnlyCols: Set[String] = {
+    val poisoned = filters.filterNot(eqOnlyTree).flatMap(_.references).toSet
+    filters.flatMap(_.references).toSet -- poisoned
+  }
 
   // adaptive selectivity evidence: rows evaluated / rows passed per column
   private val evaluated = mutable.HashMap[String, Long]()

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump .explain("formatted") for every SparkEntry query (or a named subset)
   * to an output directory — the before/after plan evidence files the
   * optimization rounds commit under plans/rNN/.
@@ -19,14 +17,7 @@ object PlanDump {
     val outDir = args(1)
     val suffix = args(2)
     val nameRe = if (args.length > 3) args(3) else ".*"
-    val cpus = ProbeEnv.cpus
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Probe.localSpark(Probe.cpus)
     new java.io.File(outDir).mkdirs()
     val names = graft.SparkEntry.queries.keys.toSeq.sorted.filter(_.matches(nameRe))
     for (name <- names) {

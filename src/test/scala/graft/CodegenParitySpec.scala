@@ -45,6 +45,20 @@ class CodegenParitySpec extends SparkTestBase {
       "graft_lsh_bucket(b, 64, 16) AS bucket",
       "graft_lsh_probes(b, 64, 16, 4) AS probes")
     parity(df)
+
+    // non-nullable inputs of mismatched length: still null under both modes
+    // (the result is nullable whatever its inputs are), and CODEGEN_ONLY
+    // compiles
+    val nn = spark.range(6).select(col("id"),
+      when(col("id") % 2 === 0, array(lit(1f), lit(2f))).otherwise(array(lit(1f))).as("a"),
+      array(lit(1f), lit(2f)).as("b"))
+    assert(!nn.schema("a").nullable && !nn.schema("b").nullable)
+    val cos = nn.selectExpr("id", "graft_cosine(a, b) AS cos")
+    parity(cos)
+    for (mode <- Seq("NO_CODEGEN", "CODEGEN_ONLY"); r <- underMode(mode)(cos.collect())) {
+      if (r.getLong(0) % 2 == 0) assert(math.abs(r.getDouble(1) - 1.0) < 1e-12, s"$mode $r")
+      else assert(r.isNullAt(1), s"$mode: length mismatch must be null, got $r")
+    }
   }
 
   test("text expressions: shingle_hashes / simhash32 / normalize") {

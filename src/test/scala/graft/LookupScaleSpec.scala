@@ -14,8 +14,8 @@ import graft.format.Lookup
   *   - misses cost index probes, not row decodes;
   *   - the TVF routes all-scalar single-key batches through the batch path
   *     (request-order output with one footer/index load per stripe).
-  * tools/LookupProbe drives the same API at sf0.1 with 10K-100K keys for
-  * the wall-clock story. */
+  * The wall-clock story at sf0.1 with 1K-100K keys is the PROBES.md r17/r18
+  * LookupProbe rows (the probe itself is in commit c8f0349's tools/). */
 class LookupScaleSpec extends SparkTestBase {
 
   private def writeIndexed(): (String, Int) = {

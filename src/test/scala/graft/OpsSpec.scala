@@ -273,11 +273,9 @@ class OpsSpec extends SparkTestBase {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got.values.forall(_ == 5L), s"star must collapse to 5: $got")
     assert(got.size == 52)
-    // r18: the gate is a provable bound (frontier degree-sum + size), so no
-    // count job EVER runs — and the hub's round must still have refused the
-    // broadcast (degree-sum 51 blows the 4-row cap even at frontier size 1)
-    assert(Dedup.lastCandCountJobs.get() == 0,
-      "degree-sum gate must run zero candidate-count jobs")
+    // r18: the gate is a provable bound (frontier degree-sum + size) — the
+    // hub's round must still have refused the broadcast (degree-sum 51 blows
+    // the 4-row cap even at frontier size 1)
     assert(Dedup.lastCandBroadcasts.exists(_ == false),
       "the hub round must take the shuffle path under a 4-row cap")
   }
@@ -301,7 +299,6 @@ class OpsSpec extends SparkTestBase {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got.values.forall(_ == 0L), s"component must collapse to 0: $got")
     assert(got.size == 54)
-    assert(Dedup.lastCandCountJobs.get() == 0, "no count jobs under the degree-sum gate")
     val bl = Dedup.lastCandBroadcasts
     // round 3 (index 2): frontier {150}, degSum 2 — broadcast; round 4
     // (index 3): frontier {hub}, size 1 but degSum 51 — MUST be shuffle
@@ -333,18 +330,15 @@ class OpsSpec extends SparkTestBase {
     assert(planNodes < 20, s"dedupClusters result plan must be a leaf+projection, got $planNodes nodes")
     val labels = out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(labels.values.forall(_ == 0L), s"chain must collapse to 0: $labels")
-    // r18 degree-sum gate: the broadcast decision costs ZERO count jobs (the
-    // bound folds into the fixpoint aggregate), and every post-round-1 round
-    // of this low-degree chain qualifies for the broadcast path
+    // r18 degree-sum gate: every post-round-1 round of this low-degree
+    // chain qualifies for the broadcast path
     val rounds = Dedup.lastClusterRounds.get()
-    val counts = Dedup.lastCandCountJobs.get()
     // r19 frontier path compression: once the whole chain is in the frontier,
     // its interior collapses in ONE round — plain one-hop propagation would
     // need 40 rounds (and trip the 25-round cap); compression lands in ~3
     // (round 0, the collapsing round, the empty-delta detection). The upper
     // bound is the regression tripwire now.
     assert(rounds >= 2 && rounds <= 6, s"pointer jumping shape changed? rounds=$rounds")
-    assert(counts == 0, s"degree-sum gate must run zero count jobs, ran $counts")
     assert(Dedup.lastCandBroadcasts.drop(1).forall(identity),
       s"chain rounds after round 1 should all broadcast: ${Dedup.lastCandBroadcasts}")
     // string ids: binary-min canonicalization, no silent long casts
@@ -407,6 +401,19 @@ class OpsSpec extends SparkTestBase {
       .toDF("doc_id", "text")
     val n = Dedup.minhashPairs(big, "doc_id", "text", maxBucket = 128).count()
     assert(n == 1500L * 1499 / 2, s"degenerate corpus must pair completely, got $n")
+
+    // the salt scales with the bucket: 1500 ids under maxBucket=8 split into
+    // ceil(2 x 1500/8) = 375 sub-buckets of ~4 ids, the largest stays under
+    // 2 x maxBucket, and the pair set stays exact
+    val sigs = spark.range(1500).select(lit(0).as("band"),
+      array(lit(7L), lit(9L)).as("sig"), col("id").as("doc"))
+    val (hot, sub) = Dedup.saltedBuckets(sigs, maxBucket = 8)
+    assert(hot.select("ns").collect().map(_.getLong(0)).toSeq == Seq(375L))
+    val subSizes = sub.select(size(col("ds"))).collect().map(_.getInt(0))
+    assert(subSizes.sum == 1500 && subSizes.length > 300, s"${subSizes.length} sub-buckets")
+    assert(subSizes.max <= 2 * 8, s"largest salted sub-bucket ${subSizes.max} > 2 x maxBucket")
+    val n8 = Dedup.minhashPairs(big, "doc_id", "text", maxBucket = 8).count()
+    assert(n8 == 1500L * 1499 / 2, s"degenerate corpus must pair completely at maxBucket=8, got $n8")
   }
 
   test("dedupClusters: overlay tail rounds run without full-frame rebuilds; pointer-in-degree overflow bails to dense") {
@@ -436,7 +443,6 @@ class OpsSpec extends SparkTestBase {
       s"tail rounds should have run as overlay rounds: ${Dedup.lastOverlayRounds.get()}")
     assert(Dedup.lastOverlayBails.get() >= 1,
       s"the 62-in-pointer round under a 12-row budget must bail: ${Dedup.lastOverlayBails.get()}")
-    assert(Dedup.lastCandCountJobs.get() == 0, "overlay rounds must run zero count jobs")
 
     // default caps: a plain 40-hop chain's tail rounds all qualify for the
     // overlay (no bail), with labels identical to the dense result
@@ -502,7 +508,6 @@ class OpsSpec extends SparkTestBase {
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(got == expect, s"trial=$trial n=$n m=$m cap=$cap " +
         s"diff=${(got.toSet diff expect.toSet).take(5)}")
-      assert(Dedup.lastCandCountJobs.get() == 0, s"trial=$trial ran a count job")
     }
   }
 

@@ -144,8 +144,8 @@ class SharedDictSpec extends AnyFunSuite {
     // r17: the LOOKUP materialization paths no longer fall back to a
     // [min,max] window for shared-dict — the index sub-stream serves the
     // exact positions and only those rows expand through the alphabet
-    // (LookupProbe measured 284 rows decoded per hit at small batches,
-    // nearly all shared-dict windows). The cascade's nextAtOrNull decline
+    // (PROBES.md r17 LookupProbe row: 284 rows decoded per hit at small
+    // batches, nearly all shared-dict windows). The cascade's nextAtOrNull decline
     // is unchanged — alphabet-preserving dense eval stays the filter path.
     val nulls = Array.tabulate(1000)(_ % 11 == 3)
     val chunks = (0 until 4).map(k =>
