@@ -17,10 +17,12 @@ import scala.collection.mutable
   * bounded (default budget 1 below top level, like
   * dwio/nimble/common/Types.h:221-248 OptimalSearchParams.allowedRecursions).
   *
-  * Selection: all gated candidates are actually encoded and the cheapest by
-  * `size * readFactor` wins — same cost model as the reference's
-  * ManualEncodingSelectionPolicy (docs/Encodings.md:76-90) with exact instead
-  * of estimated sizes (affordable because chunks are <= ~16K rows).
+  * Selection: analytic size estimates rank the gated candidates, the best
+  * one or two are actually encoded, and the cheapest by `size * readFactor`
+  * wins — same cost model as the reference's ManualEncodingSelectionPolicy
+  * (docs/Encodings.md:76-90), settled on exact instead of estimated sizes
+  * (affordable because chunks are <= ~16K rows). The trained shortcuts on
+  * top are constants (see "selection thresholds" below).
   */
 object Codecs {
   // codec ids (aligned with the reference's EncodingType enum where possible)
@@ -1411,51 +1413,22 @@ object Codecs {
   private def bitsFor(range: Long): Int =
     if (range == 0) 1 else 64 - java.lang.Long.numberOfLeadingZeros(range)
 
-  // ------------------------------------------------ selection policy hook
-  /** Pluggable pre-selection policy (reference:
-    * encodings/selection/EncodingSelectionPolicy.h:339
-    * LearnedEncodingSelectionPolicy): a stats-driven model may short-circuit
-    * the candidate search when it predicts nothing will beat Trivial —
-    * a write-throughput win on incompressible chunks. The model itself is
-    * trained offline (the reference ships a small linear model over repeat/
-    * cardinality features); this hook takes the learned parameters. The
-    * default [[CostSelection]] always runs the full cost-based search. */
-  trait SelectionPolicy {
-    /** Long-backed chunks: fractions are cheap single-pass features —
-      * runs/n, distinct/n (1.0 when cardinality capped), the bit-width of
-      * (max-min) over the physical width, and the bit-width of the largest
-      * SAMPLED adjacent delta over the physical width (sorted sequences —
-      * timestamps, monotonic ids — have small deltas even when their total
-      * range is wide, and the delta family compresses them heavily). true =
-      * emit Trivial directly, skipping the candidate search (the ONLY
-      * short-circuit the format supports — a policy cannot pick an
-      * arbitrary codec, it can only predict that searching is wasted). */
-    def skipToTrivialLongs(phys: Byte, n: Int, runFraction: Double,
-        uniqueFraction: Double, widthFraction: Double,
-        deltaWidthFraction: Double, pforRatio: Double, blockRatio: Double,
-        subintRatio: Double): Boolean
-    /** Byte/string chunks: sampled Shannon entropy (bits/byte) is the
-      * compressibility proxy — hex/base64-ish data stays well under 8. */
-    def skipToTrivialBytes(n: Int, totalBytes: Int, entropyBitsPerByte: Double): Boolean
-    /** false when [[skipToTrivialBytes]] is constant-false, so the encoder
-      * skips the sampled-entropy pass entirely on the bytes write path. */
-    def usesBytesGate: Boolean = true
-    /** Bitmask of candidate families whose O(n) ESTIMATION pass should be
-      * skipped for this chunk ([[SkipPfor]] — the bit-width histogram,
-      * [[SkipBlockBp]] — the per-block range scan, [[SkipSubint]] — the
-      * neighbor-xor pass): the model predicts they cannot reach the
-      * exact-encode top-2. 0 = estimate everything. Skipping only ever
-      * DROPS a candidate, so the worst possible outcome on shapes outside
-      * the training corpus is a slightly larger chunk — never a decode
-      * change. */
-    def skipEstimationMask(phys: Byte, n: Int, runFraction: Double,
-        uniqueFraction: Double, widthFraction: Double, deltaWidthFraction: Double,
-        pforRatio: Double, blockRatio: Double, subintRatio: Double): Int = 0
-  }
+  // ------------------------------------------------ selection thresholds
+  // One cost model picks every chunk's codec (the reference's
+  // ManualEncodingSelectionPolicy): each gated candidate gets an analytic
+  // size estimate, the best one or two by `estimate x readFactor` are
+  // encoded, and emitBest keeps the cheaper. The constants below are the
+  // trained shortcuts on top of it (the learned half of the reference's
+  // encodings/selection/EncodingSelectionPolicy.h:339): each skips only work
+  // that never changed the emitted bytes on the training corpora. They are
+  // frozen; CodecsSpec's drift arms (production vs [[withReferenceSearch]])
+  // and its digest pin guard them. The offline trainer that derived them is
+  // `git show a655c18:src/main/scala/graft/tools/GateTrainer.scala`
+  // (COVERAGE.md §2.5); re-derive after any cost-model or codec change.
 
-  final val SkipPfor = 1
-  final val SkipBlockBp = 2
-  final val SkipSubint = 4
+  private final val SkipPfor = 1
+  private final val SkipBlockBp = 2
+  private final val SkipSubint = 4
 
   /** Estimation passes skipped by the trained pre-filter since JVM start
     * (observability for the write-throughput contract test). */
@@ -1465,39 +1438,26 @@ object Codecs {
     * (the trained ranking margin fired) since JVM start. */
   val singleEncodes = new java.util.concurrent.atomic.AtomicLong()
 
-  /** TRAINED top-1 ranking margin (tools/GateTrainer part 3 — the ranking
-    * half of the reference's EncodingSelectionPolicy.h:339): when the best
-    * candidate's read-factor-adjusted size estimate sits under this fraction
-    * of the runner-up's, the runner-up is never exact-encoded. Derived as
-    * the midpoint between the largest flip-free estimate ratio and the
-    * smallest ratio at which the exact winner was EVER the runner-up on the
-    * trace corpus (so corpus chunks emit byte-identical output); floored at
-    * the hand-set 0.75 it replaces. Re-derive after any cost-model change:
-    * `tools/run_main.sh graft.tools.GateTrainer`. */
-  @volatile private[format] var Top1RatioMax: Double = 0.75
-  /** Trainer access to the top-1 margin (graft.tools; 0.0 = always encode
-    * the top-2, the labeling mode). */
-  def setTop1Ratio(r: Double): Unit = Top1RatioMax = r
-  def top1Ratio: Double = Top1RatioMax
-
-  /** Trainer diagnostics: exact-encode EVERY gated candidate and emit the
-    * true byte-minimum — the size an oracle ranking would reach. Never on
-    * in production (the point of estimates is not paying this). */
-  @volatile private[format] var ExhaustiveEncodeAll: Boolean = false
-  def setExhaustiveEncodeAll(b: Boolean): Unit = ExhaustiveEncodeAll = b
+  /** TRAINED top-1 ranking margin (trainer part 3 — the ranking half of the
+    * reference's EncodingSelectionPolicy.h:339): when the best candidate's
+    * read-factor-adjusted size estimate sits under this fraction of the
+    * runner-up's, the runner-up is never exact-encoded. Derived as the
+    * midpoint between the largest flip-free estimate ratio and the smallest
+    * ratio at which the exact winner was EVER the runner-up on the trace
+    * corpus (so corpus chunks emit byte-identical output); floored at the
+    * hand-set 0.75 it replaces. */
+  private final val Top1RatioMax = 0.75
 
   /** TRAINED per-pair margins overriding [[Top1RatioMax]] for specific
     * (estimate-rank-0, estimate-rank-1) candidate pairs: some pairs rank on
-    * near-exact size estimates and never flip even at ratios close to 1
-    * (e.g. FOR vs SIMDFOR — byte-identical payload arithmetic), while the
-    * composite-codec pairs flip down to ~0.32 and keep the conservative
-    * default. Keys are `(id0 << 8) | id1`; derived (with the global
-    * fallback) by GateTrainer part 3 over the corpus + bench-grid shapes,
-    * min-support 20 searches, margin pinned midway below each pair's first
-    * observed flip. */
-  /** Trained r16 (`tools/run_main.sh graft.tools.GateTrainer`, part 3):
-    * 1132 labeled searches over corpus + bench-grid + the ranking extension
-    * (nine seeds x two sizes; min support 12). Three r16 rule changes:
+    * near-exact size estimates and never flip even at ratios close to 1,
+    * while the composite-codec pairs flip down to ~0.32 and keep the
+    * conservative default. Keys are `(id0 << 8) | id1`; margin pinned
+    * midway below each pair's first observed flip.
+    *
+    * Trained r16 (trainer part 3): 1132 labeled searches over corpus +
+    * bench-grid + the ranking extension (nine seeds x two sizes; min
+    * support 12). Three r16 rule changes:
     * (1) pairs where BOTH estimates are exact ([[exactSizeEstimate]])
     * bypass the margin entirely — 417 of the 1132 searches single-encode by
     * proof, so they no longer appear in the table; (2) flips BELOW the
@@ -1505,18 +1465,19 @@ object Codecs {
     * losses (the default margin emits identical bytes either way), so
     * margin safety requires flip-freedom only in [default, margin) — this
     * unlocked SUBINT/TRIVIAL, whose 12 flips all sit below the 0.75 default
-    * (down to ratio 0.32) while its 42 in-band samples never flip; (3) a margin must be backed by
-    * observed flip-free ratios INSIDE the band it opens (HUFFMAN/DICT,
-    * whose every sample flips below the default, trains no override).
-    * Installing this table leaves encoded sizes BYTE-IDENTICAL on every
-    * trainer shape while labeled single-encodes rise 806 -> 1009 of 1132
-    * (production set: 541 of 597 searches single-encode, was 500). The
-    * remaining 123 labeled doubles are dominated by pairs with OBSERVED
-    * in-band flips — DELTABLOCK/DELTA (44 flips in 0.91..0.98),
-    * HUFFMAN/PFOR (20 in 0.75..0.999), FOR/DELTA (8) — where the second
-    * encode is the decision procedure: skipping it changes bytes by
-    * construction, a permanent decline documented in COVERAGE §2.5. */
-  private[format] val DefaultTop1PairMax: Map[Int, Double] = Map(
+    * (down to ratio 0.32) while its 42 in-band samples never flip; (3) a
+    * margin must be backed by observed flip-free ratios INSIDE the band it
+    * opens (HUFFMAN/DICT, whose every sample flips below the default,
+    * trains no override).
+    * This table leaves encoded sizes BYTE-IDENTICAL on every trainer shape
+    * while labeled single-encodes rise 806 -> 1009 of 1132 (production set:
+    * 541 of 597 searches single-encode, was 500). The remaining 123 labeled
+    * doubles are dominated by pairs with OBSERVED in-band flips —
+    * DELTABLOCK/DELTA (44 flips in 0.91..0.98), HUFFMAN/PFOR (20 in
+    * 0.75..0.999), FOR/DELTA (8) — where the second encode is the decision
+    * procedure: skipping it changes bytes by construction, a permanent
+    * decline documented in COVERAGE §2.5. */
+  private final val DefaultTop1PairMax: Map[Int, Double] = Map(
     pairKey(TRIVIAL, HUFFMAN) -> 0.9717,
     pairKey(TRIVIAL, DELTABLOCK) -> 0.9210,
     pairKey(DICT, FREQPART) -> 0.9793,
@@ -1531,13 +1492,7 @@ object Codecs {
     pairKey(HUFFMAN, SIMDFOR) -> 0.9938,
     pairKey(DELTABLOCK, TRIVIAL) -> 0.9950,
     pairKey(DELTABLOCK, DELTA) -> 0.9095)
-  @volatile private[format] var Top1PairMax: Map[Int, Double] = DefaultTop1PairMax
-  /** Trainer access: null restores the trained defaults; empty disables
-    * every pair override (the pure-global labeling/ablation mode). */
-  def setTop1PairTable(t: Map[Int, Double]): Unit =
-    Top1PairMax = if (t == null) DefaultTop1PairMax else t
-  def top1PairTable: Map[Int, Double] = Top1PairMax
-  @inline private[graft] def pairKey(a: Byte, b: Byte): Int = ((a & 0xff) << 8) | (b & 0xff)
+  @inline private def pairKey(a: Byte, b: Byte): Int = ((a & 0xff) << 8) | (b & 0xff)
 
   /** Ids whose planner size estimate is EXACT — estimate == emitted payload
     * byte count. TRIVIAL: raw little-endian values (n x width). FOR/SIMDFOR:
@@ -1546,86 +1501,38 @@ object Codecs {
     * length. For a pair of exact ids the estimate ranking IS the exact-size
     * ranking (same readFactor weighting as emitBest), so double-encoding
     * them can never flip the winner. */
-  @inline private[graft] def exactSizeEstimate(id: Byte): Boolean =
+  @inline private def exactSizeEstimate(id: Byte): Boolean =
     id == TRIVIAL || id == FOR || id == SIMDFOR || id == VARINT
 
-  /** When non-null (offline trainer introspection): one entry per candidate
-    * search that exact-encoded two candidates — (cost-adjusted estimate
-    * ratio top0/top1, whether the exact winner was the runner-up,
-    * estimate-rank-0 id, estimate-rank-1 id). */
-  private[format] val rankTrace =
-    new ThreadLocal[scala.collection.mutable.ArrayBuffer[(Double, Boolean, Byte, Byte)]]
+  /** Set on a thread for the extent of [[withReferenceSearch]]. */
+  private val referenceSearch =
+    ThreadLocal.withInitial[java.lang.Boolean](() => java.lang.Boolean.FALSE)
 
-  /** Run `f` with ranking tracing enabled (trainer part 3). */
-  def withRankTrace[T](f: => T): (T, Seq[(Double, Boolean, Byte, Byte)]) = {
-    val buf = scala.collection.mutable.ArrayBuffer[(Double, Boolean, Byte, Byte)]()
-    rankTrace.set(buf)
-    try { val r = f; (r, buf.toSeq) } finally rankTrace.remove()
+  /** Runs `f` with the reference search on the calling thread (other
+    * threads keep the production path): no estimation pre-filter, no bytes
+    * candidate gates, no FSST estimate-skip and no per-pair margins. The
+    * global [[Top1RatioMax]] margin and the exact-pair bypass stay. The
+    * drift specs compare production output against it. */
+  private[graft] def withReferenceSearch[T](f: => T): T = {
+    val prev = referenceSearch.get()
+    referenceSearch.set(java.lang.Boolean.TRUE)
+    try f finally referenceSearch.set(prev)
   }
 
-  /** Default: no pre-selection; every gated candidate is estimated and the
-    * best 1-2 fully encoded (the Manual/cost policy). */
-  object CostSelection extends SelectionPolicy {
-    def skipToTrivialLongs(phys: Byte, n: Int, runFraction: Double,
-        uniqueFraction: Double, widthFraction: Double,
-        deltaWidthFraction: Double, pforRatio: Double, blockRatio: Double,
-        subintRatio: Double): Boolean = false
-    def skipToTrivialBytes(n: Int, totalBytes: Int, entropyBitsPerByte: Double): Boolean = false
-  }
+  /** TRAINED estimation pre-filter thresholds (trainer part 2). Each
+    * feature is a sampled cost-ratio proxy of the family vs plain FOR
+    * ([[estimationFeatures]]); a family whose proxy sits ABOVE its
+    * threshold was never in the exact-encode top-2 on any corpus chunk (any
+    * recursion depth), margin-pinned. Skipping only ever DROPS a candidate,
+    * so the worst outcome on shapes outside the training corpus is a
+    * slightly larger chunk — never a decode change. */
+  private final val PforRatioMax = 0.9040
+  private final val BlockRatioMax = 0.8906
+  private final val SubintRatioMax = 0.8762
 
-  /** Linear gate with offline-learned weights: fires (emits Trivial without
-    * any candidate encoding) when the score is positive.
-    *
-    * Default weights are TRAINED, not hand-set: [[graft.tools.GateTrainer]]
-    * labels a 225-chunk corpus across the benchmark pattern families by
-    * running the real cost-based search (skip-safe iff the emitted winner
-    * saves < 3% vs Trivial — the cost model's decode-speed priors included,
-    * so e.g. 56-bit random longs correctly label skip-safe because the
-    * search itself picks Trivial there), then grid-searches weight vectors
-    * with the bias pinned a margin below the hardest compressible chunk.
-    * Result (r13 corpus, adversarial PFOR/BLOCKBP/SUBINT families
-    * included): 75/84 = 89.3% recall on skip-safe chunks, zero false fires
-    * by construction — the ratio-proxy vetoes carry the separation the four
-    * fraction features cannot see. Re-derive after any cost-model or codec
-    * change: `tools/run_main.sh graft.tools.GateTrainer`. */
-  final class LearnedTrivialGate(
-      runW: Double = 0.5, uniqueW: Double = 0.5, widthW: Double = 0.5,
-      deltaW: Double = 1.0, bias: Double = -2.2688,
-      entropyThreshold: Double = 7.5) extends SelectionPolicy {
-    def skipToTrivialLongs(phys: Byte, n: Int, runFraction: Double,
-        uniqueFraction: Double, widthFraction: Double,
-        deltaWidthFraction: Double, pforRatio: Double, blockRatio: Double,
-        subintRatio: Double): Boolean =
-      // the cost-ratio proxies VETO the linear gate: a chunk compressible
-      // through patched-FOR, per-block packing, or a hi/lo bit split (the
-      // r13 adversarial families — all four fraction features sit at ~1.0
-      // there, so no linear separator can see them) must keep its search
-      pforRatio > PforRatioMax && blockRatio > BlockRatioMax &&
-        subintRatio > SubintRatioMax &&
-        runW * runFraction + uniqueW * uniqueFraction + widthW * widthFraction +
-          deltaW * deltaWidthFraction + bias > 0
-    def skipToTrivialBytes(n: Int, totalBytes: Int, entropyBitsPerByte: Double): Boolean =
-      entropyBitsPerByte > entropyThreshold
-    override def skipEstimationMask(phys: Byte, n: Int, runFr: Double, uniqueFr: Double,
-        widthFr: Double, deltaFr: Double, pforRatio: Double, blockRatio: Double,
-        subintRatio: Double): Int =
-      trainedEstimationMask(runFr, uniqueFr, widthFr, deltaFr, pforRatio, blockRatio, subintRatio)
-  }
-
-  /** TRAINED estimation pre-filter thresholds (tools/GateTrainer part 2 —
-    * re-derive after any cost-model or codec change). Each feature is a
-    * sampled cost-ratio proxy of the family vs plain FOR; a family whose
-    * proxy sits ABOVE its threshold was never in the exact-encode top-2 on
-    * any corpus chunk (any recursion depth), margin-pinned. */
-  // @volatile: read on every encodeLongs call, retuned at runtime by the
-  // trainer/specs — a concurrent encoder must never see a stale/torn mix
-  @volatile private[format] var PforRatioMax: Double = 0.9040
-  @volatile private[format] var BlockRatioMax: Double = 0.8906
-  @volatile private[format] var SubintRatioMax: Double = 0.8762
-
-  /** TRAINED bytes-candidate pre-filter thresholds (GateTrainer part 4 —
-    * r15). Strings are where selection is expensive: every surviving
-    * candidate FULLY encodes. Each threshold gates one candidate's O(n) /
+  /** TRAINED bytes-candidate pre-filter thresholds (trainer part 4 — r15).
+    * Strings are where selection is expensive: every surviving candidate
+    * FULLY encodes. Each threshold gates one candidate's O(n) /
     * O(totalBytes) build pass behind a bounded sampled feature, pinned so a
     * skipped candidate was never the emitBest WINNER on any bytes-corpus
     * chunk (skipping a non-winner provably never changes output bytes):
@@ -1636,33 +1543,24 @@ object Codecs {
     *   anyway — this avoids paying the hashing to find out);
     * - fsst: skip table training when the sampled distinct-4-gram fraction
     *   sits ABOVE FsstGram4Max (FSST pays only on repeated substrings).
-    * CostSelection bypasses all three (labeling stays exhaustive).
-    * Trained r15 (`tools/run_main.sh graft.tools.GateTrainer`, part 4): 144
-    * bytes-corpus chunks, 171 encode invocations traced at every recursion
-    * level (DICT alphabets front-code — top-level winner bounds alone would
-    * drift); with these thresholds the corpus re-encodes BYTE-IDENTICAL
-    * while skipping 96 prefix scans, 126 dict hash passes, 40 FSST
-    * trainings and 100 trivial memcpys. */
-  @volatile private[format] var PrefixSharedMin: Double = 0.2176
-  @volatile private[format] var DictDistinctMax: Double = 0.9531
-  @volatile private[format] var FsstGram4Max: Double = 0.9958 // r15 strided retrain
-  def setBytesGateThresholds(prefixMin: Double, dictMax: Double, gram4Max: Double): Unit = {
-    PrefixSharedMin = prefixMin; DictDistinctMax = dictMax; FsstGram4Max = gram4Max
-  }
-  def bytesGateThresholds: (Double, Double, Double) = (PrefixSharedMin, DictDistinctMax, FsstGram4Max)
-  /** FSST estimate-skip margin (GateTrainer part 4's drift search): after
-    * the table trains and the sample compresses, the FULL per-string encode
-    * — the single most expensive candidate pass — is skipped when an
+    * Trained r15 over 144 bytes-corpus chunks, 171 encode invocations
+    * traced at every recursion level (DICT alphabets front-code — top-level
+    * winner bounds alone would drift); with these thresholds the corpus
+    * re-encodes BYTE-IDENTICAL while skipping 96 prefix scans, 126 dict
+    * hash passes, 40 FSST trainings and 100 trivial memcpys. */
+  private final val PrefixSharedMin = 0.2176
+  private final val DictDistinctMax = 0.9531
+  private final val FsstGram4Max = 0.9958 // r15 strided retrain
+  /** FSST estimate-skip margin (trainer part 4's drift search): after the
+    * table trains and the sample compresses, the FULL per-string encode —
+    * the single most expensive candidate pass — is skipped when an
     * already-built candidate's cost beats `margin x estimated FSST size`
     * (table bytes + sampled ratio x payload; the lengths block is omitted,
-    * UNDERestimating the size, so the skip errs toward building). 0 turns
-    * the skip off. Trained r15: the part-4 drift search found the WHOLE
-    * grid (0.5..0.99) byte-identical on the corpus — the underestimate
-    * plus real winner gaps leave wide headroom — and 0.99 skips 76 of the
-    * corpus's eligible full encodes. */
-  @volatile private[format] var FsstEstSkipMax: Double = 0.99
-  def setFsstEstSkipMax(m: Double): Unit = FsstEstSkipMax = m
-  def fsstEstSkipMax: Double = FsstEstSkipMax
+    * UNDERestimating the size, so the skip errs toward building). Trained
+    * r15: the drift search found the WHOLE grid (0.5..0.99) byte-identical
+    * on the corpus — the underestimate plus real winner gaps leave wide
+    * headroom — and 0.99 skips 76 of the corpus's eligible full encodes. */
+  private final val FsstEstSkipMax = 0.99
   /** Candidate build passes skipped by the bytes pre-filter (observability
     * + spec contract that the gates really fire). */
   val bytesPrefixSkips = new java.util.concurrent.atomic.AtomicLong()
@@ -1670,22 +1568,9 @@ object Codecs {
   val bytesFsstSkips = new java.util.concurrent.atomic.AtomicLong()
   val bytesTrivialSkips = new java.util.concurrent.atomic.AtomicLong()
 
-  /** Part-4 labeling trace: (winner id, sampled prefix/distinct/gram4
-    * features) per [[encodeBytes]] invocation at EVERY recursion level —
-    * the gates fire inside sub-encodes too (a DICT alphabet may front-code),
-    * so winner bounds derived from top-level invocations alone would skip a
-    * sub-level winner and drift. */
-  private val bytesTraceTL =
-    new ThreadLocal[scala.collection.mutable.ArrayBuffer[(Byte, Double, Double, Double)]]()
-  def withBytesTrace[T](f: => T): (T, Seq[(Byte, Double, Double, Double)]) = {
-    val buf = scala.collection.mutable.ArrayBuffer[(Byte, Double, Double, Double)]()
-    bytesTraceTL.set(buf)
-    try { val r = f; (r, buf.toSeq) } finally bytesTraceTL.remove()
-  }
-
   /** Sampled consecutive-pair shared-prefix fraction over <= 256 strided
     * pairs: estimates the full scan's `shared / totalBytes` gate input. */
-  private[graft] def sampledPrefixShared(col: BytesCol): Double = {
+  private def sampledPrefixShared(col: BytesCol): Double = {
     val n = col.len
     if (n < 2) return 0.0
     val pairs = math.min(n - 1, 256)
@@ -1711,7 +1596,7 @@ object Codecs {
   /** Sampled strided distinct fraction over <= 256 strings (keys truncated
     * at 64 bytes — truncation can only UNDER-count distinct, which keeps the
     * dict pass rather than skipping it: the safe direction). */
-  private[graft] def sampledDistinctFraction(col: BytesCol): Double = {
+  private def sampledDistinctFraction(col: BytesCol): Double = {
     val n = col.len
     val k = math.min(n, 256)
     val step = math.max(1, (n + k - 1) / k)
@@ -1734,7 +1619,7 @@ object Codecs {
     * predicts a table that cannot pay. Strided, not head-only — a payload
     * whose random head precedes a repetitive tail would otherwise misgate
     * (the same pathology [[Fsst.stridedRatio]] fixes for the ratio). */
-  private[graft] def sampledGram4Fraction(col: BytesCol): Double = {
+  private def sampledGram4Fraction(col: BytesCol): Double = {
     val off = col.offsets(0)
     val total = col.offsets(col.len) - off
     if (total < 8) return 1.0
@@ -1762,8 +1647,10 @@ object Codecs {
     if (grams == 0) 1.0 else seen.size.toDouble / grams
   }
 
-  private[format] def trainedEstimationMask(runFr: Double, uniqueFr: Double,
-      widthFr: Double, deltaFr: Double, pforRatio: Double, blockRatio: Double,
+  /** Bitmask of candidate families whose O(n) estimation pass is skipped
+    * for this chunk: the sampled proxy says they cannot reach the
+    * exact-encode top-2. */
+  private def trainedEstimationMask(pforRatio: Double, blockRatio: Double,
       subintRatio: Double): Int = {
     var m = 0
     if (pforRatio > PforRatioMax) m |= SkipPfor
@@ -1772,33 +1659,7 @@ object Codecs {
     m
   }
 
-  /** Production default: the full cost-based search, pre-filtered by the
-    * trained estimation mask (the learned half of the reference's
-    * EncodingSelectionPolicy.h:339 — rank candidates from cheap features,
-    * spend estimation/encode work only on the plausible ones). */
-  object TrainedSelection extends SelectionPolicy {
-    def skipToTrivialLongs(phys: Byte, n: Int, runFraction: Double,
-        uniqueFraction: Double, widthFraction: Double,
-        deltaWidthFraction: Double, pforRatio: Double, blockRatio: Double,
-        subintRatio: Double): Boolean = false
-    def skipToTrivialBytes(n: Int, totalBytes: Int, entropyBitsPerByte: Double): Boolean = false
-    override def skipEstimationMask(phys: Byte, n: Int, runFr: Double, uniqueFr: Double,
-        widthFr: Double, deltaFr: Double, pforRatio: Double, blockRatio: Double,
-        subintRatio: Double): Int =
-      trainedEstimationMask(runFr, uniqueFr, widthFr, deltaFr, pforRatio, blockRatio, subintRatio)
-    override def usesBytesGate: Boolean = false
-  }
-
-  @volatile private var selectionPolicy: SelectionPolicy = TrainedSelection
-  /** Install a policy per JVM (tests/ingest jobs); pass null to restore the
-    * default ([[TrainedSelection]]); [[CostSelection]] disables every
-    * learned shortcut (the exhaustive search — trainer/labeling mode). */
-  def setSelectionPolicy(p: SelectionPolicy): Unit =
-    selectionPolicy = if (p == null) TrainedSelection else p
-  def currentSelectionPolicy: SelectionPolicy = selectionPolicy
-
-  /** Sampled estimation-filter features over <= 1025 values (the deltaFr
-    * sample budget) — each is a cheap PROXY of the family's real cost
+  /** Sampled estimation-filter features over <= 1025 values — each is a cheap PROXY of the family's real cost
     * estimate, expressed as a ratio to plain FOR at the global width, so
     * thresholds are scale-free:
     *  - pforRatio: best sampled patched-FOR cost (per candidate width w:
@@ -1808,7 +1669,7 @@ object Codecs {
     *  - blockRatio: mean over sampled 128-value windows of window-range
     *    width / global range width — BlockBitPacking's per-block cost
     *    against FOR. */
-  private[format] def estimationFeatures(values: Array[Long], phys: Byte,
+  private def estimationFeatures(values: Array[Long], phys: Byte,
       st: LongStats): (Double, Double, Double) = {
     if (st.max == st.min) return (1.0, 1.0, 1.0)
     val overflow = st.rangeOverflow
@@ -1884,95 +1745,6 @@ object Codecs {
     (pforBest, blockRatio, subintBest)
   }
 
-
-  /** When non-null (offline trainer introspection), every [[encodeLongs]]
-    * invocation that runs the candidate search appends
-    * (phys, n, gate features, estimation features, structural-eligibility
-    * mask, exact-encoded top ids). */
-  private[format] val selectionTrace =
-    new ThreadLocal[scala.collection.mutable.ArrayBuffer[
-      (Byte, Int, (Double, Double, Double, Double), (Double, Double, Double), Int, Seq[Byte])]]
-
-  /** Run `f` with selection tracing enabled (offline trainer introspection):
-    * returns (result, one entry per long candidate search at any recursion
-    * depth: phys, n, gate features, estimation features, eligibility mask,
-    * exact-encoded top-2 ids). */
-  def withSelectionTrace[T](f: => T)
-      : (T, Seq[(Byte, Int, (Double, Double, Double, Double), (Double, Double, Double), Int, Seq[Byte])]) = {
-    val buf = scala.collection.mutable.ArrayBuffer[
-      (Byte, Int, (Double, Double, Double, Double), (Double, Double, Double), Int, Seq[Byte])]()
-    selectionTrace.set(buf)
-    try { val r = f; (r, buf.toSeq) } finally selectionTrace.remove()
-  }
-
-  /** Trainer access to the estimation-filter thresholds (graft.tools). */
-  def setEstimationThresholds(pforRatioMax: Double, blockRatioMax: Double,
-      subintRatioMax: Double): Unit = {
-    PforRatioMax = pforRatioMax
-    BlockRatioMax = blockRatioMax
-    SubintRatioMax = subintRatioMax
-  }
-  def estimationThresholds: (Double, Double, Double) =
-    (PforRatioMax, BlockRatioMax, SubintRatioMax)
-
-  /** The learned gate's feature vector for a long chunk — factored out so
-    * the offline trainer ([[graft.tools.GateTrainer]]) and the hit-rate spec
-    * score EXACTLY what the production gate scores. */
-  private[graft] def longGateFeatures(values: Array[Long],
-      phys: Byte): (Double, Double, Double, Double) =
-    longGateFeatures(values, phys, new LongStats(values))
-
-  /** Gate features + estimation cost-ratio proxies in one call (trainer and
-    * spec entry point — identical arithmetic to the production path). */
-  private[graft] def longSelectionFeatures(values: Array[Long], phys: Byte)
-      : ((Double, Double, Double, Double), (Double, Double, Double)) = {
-    val st = new LongStats(values)
-    (longGateFeatures(values, phys, st), estimationFeatures(values, phys, st))
-  }
-
-  private[format] def longGateFeatures(values: Array[Long], phys: Byte,
-      st0: LongStats): (Double, Double, Double, Double) = {
-    val st = st0
-    val n = values.length
-    val widthFr =
-      if (st.rangeOverflow) 1.0
-      else bitsFor(st.max - st.min).toDouble / (8.0 * PhysType.byteWidth(phys))
-    val uniqueFr = if (st.distinctCapped) 1.0 else st.distinct.size.toDouble / n
-    // sampled max adjacent delta: sorted sequences stay delta-compressible
-    // even when their total range spans the full width
-    val deltaFr = {
-      var maxD = 0L
-      var i = 1
-      val end = math.min(n, 1025)
-      while (i < end) {
-        val d = values(i) - values(i - 1)
-        val m = if (d == Long.MinValue) Long.MaxValue else math.abs(d)
-        if (m > maxD) maxD = m
-        i += 1
-      }
-      bitsFor(maxD).toDouble / (8.0 * PhysType.byteWidth(phys))
-    }
-    (st.runCount.toDouble / n, uniqueFr, widthFr, deltaFr)
-  }
-
-  /** Shannon entropy (bits/byte) of bytes[off, off+len). */
-  private[format] def byteEntropy(bytes: Array[Byte], off: Int, len: Int): Double = {
-    if (len <= 0) return 0.0
-    val counts = new Array[Int](256)
-    var i = 0
-    while (i < len) { counts(bytes(off + i) & 0xff) += 1; i += 1 }
-    var h = 0.0
-    i = 0
-    while (i < 256) {
-      if (counts(i) > 0) {
-        val p = counts(i).toDouble / len
-        h -= p * (math.log(p) / math.log(2.0))
-      }
-      i += 1
-    }
-    h
-  }
-
   private def encodeLongs(values: Array[Long], phys: Byte, sink: ByteSink, depth: Int,
       replay: Replay = null): Unit = {
     val n = values.length
@@ -1982,50 +1754,27 @@ object Codecs {
       if (replay != null) replay.observe(CONST, full = true)
       header(sink, CONST, phys, n); sink.writeZigZag(st.min); return
     }
-    // policy pre-selection: a learned gate may skip the search entirely,
-    // and the trained estimation filter may skip candidate families' O(n)
-    // estimation passes (both default-off only under CostSelection)
-    val pol = selectionPolicy
-    val trace = selectionTrace.get()
+    val reference = referenceSearch.get().booleanValue
     val lockedId: Byte = if (replay != null && !replay.reopen) replay.lockedId else -1
     // Locked fast path: when the replay layout is locked, today's selection
     // already discards every non-locked candidate AFTER paying for all their
-    // O(n) estimation passes (plus the gate-feature passes and the lazy
-    // stats they force) — so building ONLY the locked plan emits the exact
-    // same bytes while skipping all of that work. Constraints that keep it
-    // provably byte-identical: the stock policies only (TrainedSelection's
-    // skipToTrivialLongs is constant-false, so the policy short-circuit
-    // cannot fire; an externally installed policy falls back to the full
-    // path), never under trainer tracing, and never when the lock is on one
-    // of the skipEstimationMask-gated families (their plan gate depends on
-    // the mask, which depends on the features we want to skip).
-    val fastLock = lockedId >= 0 && trace == null &&
-      ((pol eq TrainedSelection) || (pol eq CostSelection)) &&
+    // O(n) estimation passes (plus the feature passes and the lazy stats
+    // they force) — so building ONLY the locked plan emits the exact same
+    // bytes while skipping all of that work. It stays provably
+    // byte-identical only when the lock is not on one of the mask-gated
+    // families (their plan gate depends on the mask, which depends on the
+    // features we want to skip).
+    val fastLock = lockedId >= 0 &&
       lockedId != PFOR && lockedId != BLOCKBP && lockedId != SUBINT
+    // trained estimation pre-filter: skip the O(n) estimation pass of the
+    // families the sampled proxies rule out of the exact-encode top-2
     var skipMask = 0
-    var traceFeat: ((Double, Double, Double, Double), (Double, Double, Double)) = null
-    // returns true when the policy emitted Trivial directly (caller returns)
-    def runPolicyBlock(): Boolean = {
-      val gateF = longGateFeatures(values, phys, st)
-      val (runFr, uniqueFr, widthFr, deltaFr) = gateF
-      val estF = estimationFeatures(values, phys, st)
-      if ((pol ne CostSelection) &&
-          pol.skipToTrivialLongs(phys, n, runFr, uniqueFr, widthFr, deltaFr,
-            estF._1, estF._2, estF._3)) {
-        if (replay != null) replay.observe(TRIVIAL, full = true)
-        header(sink, TRIVIAL, phys, n)
-        trivialLongs(values, phys, sink)
-        return true
-      }
-      if (pol ne CostSelection) {
-        skipMask = pol.skipEstimationMask(phys, n, runFr, uniqueFr, widthFr, deltaFr,
-          estF._1, estF._2, estF._3)
-        if (skipMask != 0) estimationSkips.incrementAndGet()
-      }
-      traceFeat = (gateF, estF)
-      false
+    def applyEstimationMask(): Unit = if (!reference) {
+      val (pforRatio, blockRatio, subintRatio) = estimationFeatures(values, phys, st)
+      skipMask = trainedEstimationMask(pforRatio, blockRatio, subintRatio)
+      if (skipMask != 0) estimationSkips.incrementAndGet()
     }
-    if (!fastLock && ((pol ne CostSelection) || trace != null) && runPolicyBlock()) return
+    if (!fastLock) applyEstimationMask()
     // Analytic size estimates per gated candidate (reference:
     // dwio/nimble/encodings/selection/EncodingSizeEstimation.h) — only the
     // best two by estimated cost are actually encoded.
@@ -2407,34 +2156,22 @@ object Codecs {
     var plans = buildPlans(if (fastLock) lockedId else -1)
     if (fastLock && plans.isEmpty) {
       // the locked codec's gate failed on this chunk — run the full search,
-      // first recovering the policy mask the non-fast path would have used
-      if (((pol ne CostSelection) || trace != null) && runPolicyBlock()) return
+      // first recovering the mask the non-fast path would have used
+      applyEstimationMask()
       plans = buildPlans(-1)
     }
     val sorted = plans.sortBy { case (id, estSize, _) => estSize * readFactor(id) }
-    if (trace != null && traceFeat != null) {
-      // structural eligibility of the pre-filterable families (what the
-      // estimation pass WOULD have cost had the filter not run)
-      var elig = 0
-      if (!st.rangeOverflow && n >= 64 && depth < MaxDepth) {
-        val wf = bitsFor(st.max - st.min)
-        if (wf > 2 && wf <= 57) elig |= SkipPfor
-      }
-      if (!st.rangeOverflow && n >= 2048) elig |= SkipBlockBp
-      if (width >= 4 && n >= 1024 && depth < MaxDepth) elig |= SkipSubint
-      trace += ((phys, n, traceFeat._1, traceFeat._2, elig, sorted.take(2).map(_._1).toSeq))
-    }
     // locked layout: encode the replayed winner alone when it is still gated
     // in; otherwise (or on a reopen probe chunk) run normal selection
     val locked = lockedId >= 0 && sorted.exists(_._1 == lockedId)
     // encode the runner-up only when the estimates are close (composite-codec
     // estimates are approximate; exact ones don't need a second opinion) —
-    // the margin is TRAINED (Top1RatioMax, GateTrainer part 3)
+    // the margins are TRAINED (Top1RatioMax, DefaultTop1PairMax)
     val c0 = sorted(0)._2 * readFactor(sorted(0)._1)
     val c1 = if (sorted.length >= 2) sorted(1)._2 * readFactor(sorted(1)._1) else 0.0
     val margin =
-      if (sorted.length >= 2)
-        Top1PairMax.getOrElse(pairKey(sorted(0)._1, sorted(1)._1), Top1RatioMax)
+      if (sorted.length >= 2 && !reference)
+        DefaultTop1PairMax.getOrElse(pairKey(sorted(0)._1, sorted(1)._1), Top1RatioMax)
       else Top1RatioMax
     // r16: when BOTH top candidates carry EXACT size estimates, the ranking
     // comparison (estSize x readFactor) is the very comparison emitBest
@@ -2444,8 +2181,7 @@ object Codecs {
     val bothExact = sorted.length >= 2 &&
       exactSizeEstimate(sorted(0)._1) && exactSizeEstimate(sorted(1)._1)
     val top =
-      if (ExhaustiveEncodeAll) sorted // trainer diagnostics only — never production
-      else if (locked) sorted.filter(_._1 == lockedId).take(1)
+      if (locked) sorted.filter(_._1 == lockedId).take(1)
       else if (sorted.length >= 2 && (bothExact || c0 < margin * c1)) {
         singleEncodes.incrementAndGet()
         sorted.take(1)
@@ -2455,9 +2191,6 @@ object Codecs {
       val s = new ByteSink(); enc(s); candidates += ((id, s.toArray))
     }
     val winner = emitBest(candidates, phys, n, sink)
-    val rt = rankTrace.get()
-    if (rt != null && !locked && top.length >= 2 && c1 > 0)
-      rt += ((c0 / c1, winner != sorted(0)._1, sorted(0)._1, sorted(1)._1))
     if (replay != null) replay.observe(winner, full = !locked)
   }
 
@@ -2911,21 +2644,6 @@ object Codecs {
 
   // ---------------------------------------------------------------- bytes
 
-  /** TRIVIAL bytes payload: lengths sub-stream + varint total + raw bytes
-    * (single source of truth for the cost path and the policy gate). */
-  private def trivialBytesPayload(col: BytesCol, depth: Int,
-      replay: Replay = null): Array[Byte] = {
-    val n = col.len
-    val ts = new ByteSink()
-    val lengths = new Array[Long](n)
-    var i = 0
-    while (i < n) { lengths(i) = (col.offsets(i + 1) - col.offsets(i)).toLong; i += 1 }
-    val ls = new ByteSink(); encodeLongs(lengths, PhysType.I32, ls, depth + 1, rchild(replay, TRIVIAL, 0)); ts.writeBlock(ls.toArray)
-    ts.writeVarint((col.offsets(n) - col.offsets(0)).toLong)
-    ts.writeBytes(col.bytes, col.offsets(0), col.offsets(n) - col.offsets(0))
-    ts.toArray
-  }
-
   private def encodeBytes(col: BytesCol, sink: ByteSink, depth: Int,
       replay: Replay = null): Unit = {
     val n = col.len
@@ -2957,30 +2675,24 @@ object Codecs {
       sink.writeBytes(col.bytes, col.offsets(0), l0)
       return
     }
-    // policy pre-selection: a learned gate may skip the candidate search
-    // (FSST training + trials dominate string write cost) when sampled
-    // entropy says the bytes are incompressible
-    val polB = selectionPolicy
-    if ((polB ne CostSelection) && polB.usesBytesGate) {
-      val total = col.offsets(n) - col.offsets(0)
-      val entropy = byteEntropy(col.bytes, col.offsets(0), math.min(total, 4096))
-      if (polB.skipToTrivialBytes(n, total, entropy)) {
-        if (replay != null) replay.observe(TRIVIAL, full = true)
-        header(sink, TRIVIAL, PhysType.Bytes, n)
-        sink.writeBytes(trivialBytesPayload(col, depth, replay))
-        return
-      }
-    }
     val candidates = mutable.ArrayBuffer[(Byte, Array[Byte])]()
-    // Trivial: lengths sub-stream + raw bytes (same payload builder as the
-    // policy gate — the layouts are provably identical). Built LAST (below):
-    // its emitBest cost has an exact floor, so a cheaper candidate skips the
-    // whole-payload memcpy.
-    def buildTrivial(): Unit = candidates += ((TRIVIAL, trivialBytesPayload(col, depth, replay)))
-    // bytes candidate pre-filter (GateTrainer part 4): bounded sampled
-    // features gate the expensive full build passes; a locked layout and
-    // the labeling policy (CostSelection) bypass the gates
-    val gated = (polB ne CostSelection) && lockedId < 0
+    // Trivial: lengths sub-stream + varint total + raw bytes. Built LAST
+    // (below): its emitBest cost has an exact floor, so a cheaper candidate
+    // skips the whole-payload memcpy.
+    def buildTrivial(): Unit = {
+      val ts = new ByteSink()
+      val lengths = new Array[Long](n)
+      var i = 0
+      while (i < n) { lengths(i) = (col.offsets(i + 1) - col.offsets(i)).toLong; i += 1 }
+      val ls = new ByteSink(); encodeLongs(lengths, PhysType.I32, ls, depth + 1, rchild(replay, TRIVIAL, 0)); ts.writeBlock(ls.toArray)
+      ts.writeVarint((col.offsets(n) - col.offsets(0)).toLong)
+      ts.writeBytes(col.bytes, col.offsets(0), col.offsets(n) - col.offsets(0))
+      candidates += ((TRIVIAL, ts.toArray))
+    }
+    // bytes candidate pre-filter (trainer part 4): bounded sampled features
+    // gate the expensive full build passes; a locked layout and the
+    // reference search bypass the gates
+    val gated = lockedId < 0 && !referenceSearch.get().booleanValue
     // Prefix (front coding): share a prefix with the previous value —
     // effective on sorted / shared-prefix strings (reference:
     // dwio/nimble/encodings/PrefixEncoding.h:64)
@@ -3139,11 +2851,12 @@ object Codecs {
         }
       }
     }
-    // Trivial last, with an EXACT skip (policy-independent, provably
-    // drift-free): its payload is >= total + 2 bytes (lengths block >= 1 +
-    // varint(total) >= 1 + the raw bytes), so its emitBest cost is >=
-    // 0.7 * (total + 2). A candidate already under that floor makes the
-    // whole-payload memcpy pointless — Trivial could never win.
+    // Trivial last, with an EXACT skip (provably drift-free, so the
+    // reference search keeps it too): its payload is >= total + 2 bytes
+    // (lengths block >= 1 + varint(total) >= 1 + the raw bytes), so its
+    // emitBest cost is >= 0.7 * (total + 2). A candidate already under that
+    // floor makes the whole-payload memcpy pointless — Trivial could never
+    // win.
     if (want(TRIVIAL)) {
       val total = col.offsets(n) - col.offsets(0)
       var minOther = Double.MaxValue
@@ -3161,10 +2874,6 @@ object Codecs {
     val lockedSatisfied = lockedId >= 0 && candidates.exists(_._1 == lockedId)
     if (candidates.isEmpty) buildTrivial()
     val winner = emitBest(candidates, PhysType.Bytes, n, sink)
-    val bt = bytesTraceTL.get()
-    if (bt != null)
-      bt += ((winner, sampledPrefixShared(col), sampledDistinctFraction(col),
-        sampledGram4Fraction(col)))
     if (replay != null) replay.observe(winner, full = !lockedSatisfied)
   }
 
